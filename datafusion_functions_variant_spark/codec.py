@@ -847,9 +847,9 @@ def convert_value(value: Any, buf: bytearray, metadata: Metadata) -> None:
 
 def _encode_object(value: dict, metadata: Metadata) -> bytes:
     """One dict → its object value bytes. Shared by ``convert_value``
-    and the top-level fast path in ``batch_from_json`` (an object ROW
-    goes straight to its bytes — no scratch bytearray and no extra
-    full-row copy per row; round 16, guide §4.2)."""
+    and the top-level fast path in ``encode_batch`` (an object ROW goes
+    straight to its bytes — no scratch bytearray and no extra full-row
+    copy per row)."""
     ob = ObjectBuilder(metadata)
     for k, v in value.items():
         convert_value(v, ob.begin_child(k), metadata)
@@ -857,37 +857,46 @@ def _encode_object(value: dict, metadata: Metadata) -> bytes:
     return ob.finish()
 
 
-def batch_from_json(
-    texts: Iterable[str | None],
-) -> tuple[bytes, list[bytes | None]]:
-    """The flagship kernel: JSON strings → (shared metadata, value buffers).
+def parse_batch(texts: list[str | None], tolerant: bool = False) -> list[Any]:
+    """One ``json.loads`` per row; a SQL null row parses to ``None``.
 
-    Mirrors ``variant_from_json`` (json.rs:38-81): parse every row, build
-    ONE metadata dictionary from the union of all keys (json.rs:51-55),
-    then encode each row against it. Fails the whole batch on the first
-    malformed row (json.rs:42-48). A top-level JSON ``null`` yields a
-    Python ``None`` (the Arrow-null of json.rs:185-196); nested nulls
-    become variant nulls.
+    Strict mode raises ``VariantError`` on the first malformed row, which
+    fails the whole batch (json.rs:42-48). Tolerant mode maps exactly the
+    malformed rows to ``None`` instead, in the same single pass.
     """
-    texts = list(texts)
-    nulls = [t is None for t in texts]
-    parsed = _parse_batch(texts, nulls)
+    out: list[Any] = []
+    for t in texts:
+        if t is None:
+            out.append(None)
+            continue
+        try:
+            out.append(json.loads(t))
+        except (ValueError, TypeError) as exc:
+            if not tolerant:
+                raise VariantError(f"malformed JSON: {exc}") from exc
+            out.append(None)
+    return out
 
+
+def encode_batch(rows: list[Any]) -> tuple[bytes, list[bytes | None]]:
+    """Parsed rows → (ONE shared metadata, value buffers).
+
+    The reference's batch-shared dictionary (json.rs:51-63): collect the
+    union of every row's keys, build the metadata once, then encode each
+    row against it. A ``None`` row yields a null slot (the Arrow-null of
+    json.rs:185-196); nested ``None`` values become variant nulls.
+    """
     keys: set[str] = set()
-    for p, isnull in zip(parsed, nulls):
-        if not isnull:
-            collect_keys(p, keys)
+    for p in rows:
+        collect_keys(p, keys)
     metadata_buf = build_metadata(keys)
     metadata = Metadata(metadata_buf)
-
     values: list[bytes | None] = []
-    for p, isnull in zip(parsed, nulls):
-        if isnull or p is None:
-            # input SQL null OR top-level JSON null → null slot
+    for p in rows:
+        if p is None:
             values.append(None)
         elif type(p) is dict:
-            # object row (the overwhelmingly common shape): straight
-            # to its bytes — no scratch bytearray, no full-row copy
+            # object row (the overwhelmingly common shape)
             values.append(_encode_object(p, metadata))
         else:
             b = bytearray()
@@ -896,43 +905,37 @@ def batch_from_json(
     return metadata_buf, values
 
 
-def _parse_batch(texts: list, nulls: list[bool]) -> list[Any]:
-    """Parse a batch of JSON texts with ONE C-level ``json.loads`` of
-    the comma-joined array instead of one interpreter round-trip per
-    row (round 16, guide §4.2: amortize per-row work over the batch).
+def batch_from_json(
+    texts: Iterable[str | None], tolerant: bool = False
+) -> tuple[bytes, list[bytes | None]]:
+    """The flagship kernel: JSON strings → (shared metadata, value buffers).
 
-    Strict-mode semantics are preserved exactly: a malformed row makes
-    the joined array malformed too, so the whole batch still fails —
-    except for one ambiguity class, a "row" that is itself a
-    comma/whitespace-separated JSON value SEQUENCE (e.g. ``"1,2"``),
-    which is invalid standalone but would silently splice extra
-    elements into the array. The element-count check catches exactly
-    that class (and any other disagreement), falling back to the
-    per-row loop whose error/acceptance behavior is the original one.
+    Mirrors ``variant_from_json`` (json.rs:38-81): ``parse_batch`` then
+    ``encode_batch``. SQL nulls and top-level JSON ``null`` give null
+    slots. Strict by default: the first malformed row fails the batch;
+    ``tolerant=True`` nulls exactly the malformed rows instead.
     """
-    row_texts = [t for t, isnull in zip(texts, nulls) if not isnull]
-    parsed_rows: list[Any] | None = None
-    if row_texts:
-        try:
-            arr = json.loads("[" + ",".join(row_texts) + "]")
-            if isinstance(arr, list) and len(arr) == len(row_texts):
-                parsed_rows = arr
-        except (ValueError, TypeError):
-            parsed_rows = None  # per-row loop raises the precise error
-    else:
-        parsed_rows = []
-    if parsed_rows is None:
-        parsed_rows = []
-        for t in row_texts:
-            try:
-                parsed_rows.append(json.loads(t))
-            except (json.JSONDecodeError, TypeError) as exc:
-                raise VariantError(f"malformed JSON: {exc}") from exc
-    out: list[Any] = []
-    it = iter(parsed_rows)
-    for isnull in nulls:
-        out.append(None if isnull else next(it))
-    return out
+    return encode_batch(parse_batch(list(texts), tolerant))
+
+
+def batch_rows(
+    metadatas: Iterable[bytes | None], values: Iterable[bytes | None]
+) -> Iterator[tuple[bytes, Metadata] | None]:
+    """Read side of the shared dictionary: yield ``(value bytes,
+    Metadata)`` per row, or ``None`` for a null row. ``Metadata`` is
+    built ONCE per distinct metadata blob (one per batch after
+    ``encode_batch``), so rows only pay their own value decode
+    (open-variant/README.md:55-57)."""
+    cache: dict[bytes, Metadata] = {}
+    for mb, vb in zip(metadatas, values):
+        if vb is None or mb is None:
+            yield None
+            continue
+        mb = bytes(mb)
+        m = cache.get(mb)
+        if m is None:
+            m = cache[mb] = Metadata(mb)
+        yield bytes(vb), m
 
 
 def to_python(value: Variant, metadata: Metadata) -> Any:
@@ -1014,9 +1017,14 @@ def _render_json(v: Any) -> str:
     raise VariantError(f"not JSON serializable: {type(v)}")
 
 
+def to_json(value_buf: bytes, metadata: Metadata) -> str:
+    """Value buffer + parsed metadata → canonical JSON text."""
+    return _render_json(to_python(Variant(value_buf), metadata))
+
+
 def to_json_str(value_buf: bytes, metadata_buf: bytes) -> str:
     """Variant pair → canonical JSON text."""
-    return _render_json(to_python(Variant(value_buf), Metadata(metadata_buf)))
+    return to_json(value_buf, Metadata(metadata_buf))
 
 
 def get_path(
@@ -1029,12 +1037,12 @@ def get_path(
     (open-variant/README.md:55-57). Returns a Python value or None if the
     path is absent.
 
-    Batch callers (the pandas UDFs) should instead parse the path once
-    with ``parse_json_path``, resolve field ids once per metadata blob
-    with ``resolve_steps``, and evaluate rows via ``walk_path`` /
-    ``get_path_prepared`` — in a batch every row shares the metadata,
-    so per-row Metadata construction + dictionary lookups are pure
-    overhead (this was ~5x the cost of the actual decode).
+    Batch callers (the pandas UDFs) should instead iterate ``batch_rows``,
+    parse the path once with ``parse_json_path``, resolve field ids once
+    per metadata blob with ``resolve_steps``, and evaluate rows via
+    ``walk_path`` / ``get_path_prepared`` — in a batch every row shares
+    the metadata, so per-row Metadata construction + dictionary lookups
+    are pure overhead (this was ~5x the cost of the actual decode).
     """
     metadata = Metadata(metadata_buf)
     steps = parse_json_path(path)

@@ -67,45 +67,10 @@ def variant_from_json(texts: pd.Series) -> pd.DataFrame:
 
 @pandas_udf(VARIANT_STRUCT)
 def try_variant_from_json(texts: pd.Series) -> pd.DataFrame:
-    """Per-row-tolerant ingestion: malformed rows → null value slot."""
-    import json as _json
-
-    texts_l = texts.tolist()
-    nulls = [t is None for t in texts_l]
-    try:
-        # clean batch (the common case): ONE C-level array parse
-        # (codec._parse_batch, r16) — tolerant semantics unchanged
-        # because a failure of the joined parse falls through to the
-        # per-row loop below, which maps each bad row to None
-        parsed = codec._parse_batch(texts_l, nulls)
-        ok = [not n for n in nulls]
-    except codec.VariantError:
-        parsed, ok = [], []
-        for t in texts_l:
-            if t is None:
-                parsed.append(None)
-                ok.append(False)
-                continue
-            try:
-                parsed.append(_json.loads(t))
-                ok.append(True)
-            except (ValueError, TypeError):
-                parsed.append(None)
-                ok.append(False)
-    keys: set[str] = set()
-    for p, good in zip(parsed, ok):
-        if good:
-            codec.collect_keys(p, keys)
-    meta = codec.build_metadata(keys)
-    m = codec.Metadata(meta)
-    values: list[bytes | None] = []
-    for p, good in zip(parsed, ok):
-        if not good or p is None:
-            values.append(None)
-        else:
-            b = bytearray()
-            codec.convert_value(p, b, m)
-            values.append(bytes(b))
+    """Per-row-tolerant ingestion: the same single parse + shared
+    dictionary path as ``variant_from_json``, but each malformed row
+    becomes a null value slot instead of failing the batch."""
+    meta, values = codec.batch_from_json(texts.tolist(), tolerant=True)
     return pd.DataFrame({"metadata": [meta] * len(values), "value": values})
 
 
@@ -166,27 +131,21 @@ def variant_extract(col, fields: dict[str, tuple[str, str]]) -> Column:
 
     @pandas_udf(StructType(out_fields))
     def _extract(v: pd.DataFrame) -> pd.DataFrame:
-        metas = v["metadata"]
-        vals = v["value"]
-        # per distinct metadata blob: Metadata parse + field-id
-        # resolution for every path group, exactly once
-        cache: dict[bytes, tuple[codec.Metadata, list[list]]] = {}
+        # field ids of every path group, resolved once per distinct
+        # metadata blob
+        fids_of: dict[codec.Metadata, list[list]] = {}
         data: dict[str, list] = {name: [] for name, _, _ in specs}
-        for mb, vb in zip(metas, vals):
-            if vb is None or mb is None:
+        for row in codec.batch_rows(v["metadata"], v["value"]):
+            if row is None:
                 for name, _, _ in specs:
                     data[name].append(None)
                 continue
-            mkey = bytes(mb)
-            ent = cache.get(mkey)
-            if ent is None:
-                m = codec.Metadata(mkey)
-                ent = cache[mkey] = (
-                    m,
-                    [codec.resolve_steps(m, steps) for steps, _ in groups],
-                )
-            m, fid_lists = ent
-            vbytes = bytes(vb)
+            vbytes, m = row
+            fid_lists = fids_of.get(m)
+            if fid_lists is None:
+                fid_lists = fids_of[m] = [
+                    codec.resolve_steps(m, steps) for steps, _ in groups
+                ]
             for (steps, outs), fids in zip(groups, fid_lists):
                 try:
                     node = codec.walk_path(vbytes, steps, fids)
@@ -238,9 +197,10 @@ def _coerce(py, dtype: str):
 @pandas_udf(StringType())
 def variant_to_json(v: pd.DataFrame) -> pd.Series:
     """Explicit variant struct → canonical JSON text."""
-    out = []
-    for mb, vb in zip(v["metadata"], v["value"]):
-        out.append(None if vb is None else codec.to_json_str(bytes(vb), bytes(mb)))
+    out = [
+        None if row is None else codec.to_json(*row)
+        for row in codec.batch_rows(v["metadata"], v["value"])
+    ]
     return pd.Series(out, dtype=object)
 
 
@@ -271,48 +231,29 @@ def _col(c) -> Column:
 @pandas_udf(VARIANT_STRUCT)
 def variant_merge_patch(vs: pd.DataFrame, patches: pd.Series) -> pd.DataFrame:
     """RFC 7386 merge patch at the VARIANT level: decode each target
-    value against the batch-shared dictionary, apply the (JSON text)
+    value against its batch-shared dictionary, apply the (JSON text)
     patch via codec.merge_patch — null deletes, objects recurse,
     scalars replace — and re-encode the whole batch against ONE new
     union dictionary (the post-merge key set can both shrink and grow,
     so the output batch rebuilds its shared metadata exactly like
-    ingestion does). A null patch or null target passes the target /
-    null through per RFC semantics."""
-    metas = vs["metadata"]
-    vals = vs["value"]
-    patch_l = patches.tolist()
-    # batch-parse the patch column (ONE C-level array parse; strict —
-    # a malformed patch fails the batch exactly as json.loads did).
-    # Null-TARGET rows are excluded from the parse like the original
-    # per-row loop, which never touched their patch text.
-    parsed_patches = codec._parse_batch(
-        patch_l,
-        [p is None or vb is None for p, vb in zip(patch_l, vals)],
+    ingestion does).
+
+    A SQL NULL patch passes the target through unchanged; the patch
+    text ``null`` replaces the target with a null slot, as
+    ``codec.merge_patch(target, None)`` does. A null target gives a
+    null result and its patch text is never parsed. A malformed patch
+    raises ``codec.VariantError`` and fails the batch."""
+    rows = list(codec.batch_rows(vs["metadata"], vs["value"]))
+    texts = patches.tolist()
+    parsed = codec.parse_batch(
+        [None if row is None else t for row, t in zip(rows, texts)]
     )
     merged: list = []
-    for mb, vb, patch in zip(metas, vals, parsed_patches):
-        if vb is None:
+    for row, text, patch in zip(rows, texts, parsed):
+        if row is None:
             merged.append(None)
             continue
-        target = codec.to_python(
-            codec.Variant(bytes(vb)), codec.Metadata(bytes(mb))
-        )
-        if patch is None:
-            merged.append(target)
-            continue
-        merged.append(codec.merge_patch(target, patch))
-    keys: set[str] = set()
-    for m in merged:
-        if m is not None:
-            codec.collect_keys(m, keys)
-    meta = codec.build_metadata(keys)
-    mobj = codec.Metadata(meta)
-    out: list[bytes | None] = []
-    for m in merged:
-        if m is None:
-            out.append(None)
-            continue
-        b = bytearray()
-        codec.convert_value(m, b, mobj)
-        out.append(bytes(b))
+        target = codec.to_python(codec.Variant(row[0]), row[1])
+        merged.append(target if text is None else codec.merge_patch(target, patch))
+    meta, out = codec.encode_batch(merged)
     return pd.DataFrame({"metadata": [meta] * len(out), "value": out})

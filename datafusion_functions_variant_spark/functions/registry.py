@@ -21,19 +21,23 @@ from . import explicit
 def _get_with_path_col(spark_type, dtype: str):
     @pandas_udf(spark_type)
     def _get(v: pd.DataFrame, paths: pd.Series) -> pd.Series:
-        meta_cache: dict[bytes, codec.Metadata] = {}
+        # (steps, field ids) per distinct (metadata blob, path)
+        prepared_of: dict[tuple[codec.Metadata, str], tuple[list, list]] = {}
         out = []
-        for mb, vb, path in zip(v["metadata"], v["value"], paths):
-            if vb is None or mb is None or path is None:
-                out.append(None)
-                continue
-            mkey = bytes(mb)
-            if mkey not in meta_cache:
-                meta_cache[mkey] = codec.Metadata(mkey)
-            try:
-                py = codec.get_path(bytes(vb), mkey, path)
-            except codec.VariantError:
-                py = None
+        for row, path in zip(codec.batch_rows(v["metadata"], v["value"]), paths):
+            py = None
+            if row is not None and path is not None:
+                vb, m = row
+                try:
+                    prepared = prepared_of.get((m, path))
+                    if prepared is None:
+                        steps = codec.parse_json_path(path)
+                        prepared = prepared_of[m, path] = (
+                            steps, codec.resolve_steps(m, steps)
+                        )
+                    py = codec.get_path_prepared(vb, m, *prepared)
+                except codec.VariantError:
+                    pass
             out.append(explicit._coerce(py, dtype))
         return pd.Series(out, dtype=object)
 

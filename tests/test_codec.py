@@ -257,6 +257,37 @@ def test_parsing_error():
         c.batch_from_json(['{"ok": 1}', "{not json"])  # batch fails (json.rs:42-48)
 
 
+def test_spliced_rows_are_malformed():
+    # each row is malformed on its own, although the rows joined with
+    # commas spell the valid array [[1, 2], 3, 4]
+    texts = ["[1", "2]", "3,4"]
+    with pytest.raises(c.VariantError):
+        c.batch_from_json(texts)
+    _, values = c.batch_from_json(texts, tolerant=True)
+    assert values == [None, None, None]
+
+
+def test_tolerant_parse_nulls_only_malformed_rows():
+    parsed = c.parse_batch(['{"a": 1}', "{bad", None, "null", "[2]"], tolerant=True)
+    assert parsed == [{"a": 1}, None, None, None, [2]]
+    meta_buf, values = c.batch_from_json(['{"a": 1}', "{bad", "[2]"], tolerant=True)
+    assert values[1] is None
+    m = c.Metadata(meta_buf)
+    assert [c.to_python(c.Variant(v), m) for v in (values[0], values[2])] == [{"a": 1}, [2]]
+
+
+def test_batch_rows_shares_one_metadata_per_blob():
+    meta_a, vals_a = c.batch_from_json(['{"x": 1}', '{"y": 2}'])
+    meta_b, vals_b = c.batch_from_json(['{"z": 3}'])
+    rows = list(c.batch_rows(
+        [meta_a, bytes(meta_a), meta_b, meta_a],
+        [vals_a[0], vals_a[1], vals_b[0], None],
+    ))
+    assert rows[3] is None
+    assert rows[0][1] is rows[1][1] is not rows[2][1]
+    assert [c.to_json(*r) for r in rows[:3]] == ['{"x":1}', '{"y":2}', '{"z":3}']
+
+
 def test_to_json_roundtrip():
     src = '{"a":[1,2.5,"x",null,true],"b":{"c":-3}}'
     meta_buf, values, _ = roundtrip([src])

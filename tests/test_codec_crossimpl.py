@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import math
+from decimal import Decimal
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -128,6 +129,46 @@ def test_property_variantval_parity(obj):
     meta, val = _codec_encode(obj)
     theirs = json.loads(VariantVal(val, meta).toJson())
     assert theirs == json.loads(json.dumps(obj))
+
+
+def _as_double(x):
+    """Decimals as floats, and -0.0 as 0.0 (a JVM decimal has no
+    negative zero), recursively."""
+    if isinstance(x, (Decimal, float)):
+        return float(x) + 0.0
+    if isinstance(x, list):
+        return [_as_double(v) for v in x]
+    if isinstance(x, dict):
+        return {k: _as_double(v) for k, v in x.items()}
+    return x
+
+
+@given(st.lists(json_values, min_size=1, max_size=6))
+@settings(max_examples=20, deadline=None)
+def test_property_batch_matches_jvm_parse_json(spark, rows):
+    """Row by row, ``codec.batch_from_json`` decodes to the same value
+    as Spark's native ``parse_json`` (one single-row DataFrame per
+    example, one literal column per JSON row). The bytes are compared
+    through ``codec.to_python`` because two differences are by design:
+    the JVM writes an unsorted dictionary (header 0x01, ours 0x11 with
+    sorted keys, so field ids differ), and it types a plain-notation
+    number such as ``2.5`` as a Decimal where the codec writes a double
+    — so JVM decimals are compared as floats. A top-level ``null`` is a
+    variant null on the JVM side and a null slot in the codec; both
+    decode to ``None``. Values are compared as JSON text so that
+    ``True`` and ``1`` differ."""
+    from pyspark.sql import functions as F
+
+    texts = [json.dumps(r) for r in rows]
+    jvm = spark.range(1).select(*(F.parse_json(F.lit(t)) for t in texts)).collect()[0]
+    meta, values = codec.batch_from_json(texts)
+    m = codec.Metadata(meta)
+    for t, v, vb in zip(texts, jvm, values):
+        theirs = codec.to_python(codec.Variant(bytes(v.value)), codec.Metadata(bytes(v.metadata)))
+        ours = None if vb is None else codec.to_python(codec.Variant(vb), m)
+        assert json.dumps(_as_double(ours), sort_keys=True) == json.dumps(
+            _as_double(theirs), sort_keys=True
+        ), t
 
 
 # Mixed-width UTF-8 alphabet: 1-, 2-, 3-, and 4-byte encodings, so the

@@ -4,9 +4,13 @@ parity at the API level)."""
 
 import json
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from datafusion_functions_variant_spark import codec
 from datafusion_functions_variant_spark.functions import explicit, variant
+from datafusion_functions_variant_spark.functions.registry import register_sql_functions
 
 
 def test_track_n_roundtrip(spark):
@@ -123,6 +127,78 @@ def test_explicit_tolerant_parse(spark):
     assert out[0]["v"]["value"] is not None
     assert out[1]["v"]["value"] is None
     assert out[2]["v"]["value"] is None
+
+
+def test_try_variant_from_json_nulls_spliced_rows():
+    # malformed one by one, although joined they spell [[1, 2], 3, 4]
+    out = explicit.try_variant_from_json.func(pd.Series(["[1", "2]", "3,4"]))
+    assert out["value"].tolist() == [None, None, None]
+
+
+def _decode_column(df: pd.DataFrame) -> list:
+    return [
+        None if vb is None else codec.to_python(codec.Variant(vb), codec.Metadata(mb))
+        for mb, vb in zip(df["metadata"], df["value"])
+    ]
+
+
+def test_merge_patch_udf_matches_codec_merge_patch():
+    """The pandas-UDF body equals codec.merge_patch row by row: a SQL
+    NULL patch keeps the target, the text ``null`` nulls it, and a
+    null target stays null without its patch text being parsed."""
+    target = '{"a": 1, "b": {"c": 2, "d": 3}}'
+    patches = ["null", "false", "0", None, '{"b": {"c": null}, "e": [1]}', "{bad"]
+    targets = explicit.variant_from_json.func(pd.Series([target] * 5 + [None]))
+    out = explicit.variant_merge_patch.func(targets, pd.Series(patches, dtype=object))
+    want = []
+    for t, p in zip(_decode_column(targets), patches):
+        if t is None:
+            want.append(None)
+        else:
+            want.append(t if p is None else codec.merge_patch(t, json.loads(p)))
+    assert _decode_column(out) == want
+    assert want[:4] == [None, False, 0, json.loads(target)]
+    assert len(set(out["metadata"])) == 1
+
+
+def test_merge_patch_udf_malformed_patch_raises():
+    targets = explicit.variant_from_json.func(pd.Series(['{"a": 1}', '{"a": 2}']))
+    with pytest.raises(codec.VariantError):
+        explicit.variant_merge_patch.func(targets, pd.Series(['{"a": 3}', "{bad"]))
+
+
+def test_sql_getters_two_paths_in_one_batch(spark):
+    """codec_get_* with a path column that varies within one Arrow
+    batch match the Python-API getter for each row's path."""
+    register_sql_functions(spark)
+    docs = [
+        '{"a": 1, "b": {"c": "x"}}',
+        '{"a": 2, "b": {"c": 7}}',
+        '{"a": "3", "b": {}}',
+        '{"b": {"c": 9}}',
+    ]
+    rows = [(d, p) for d in docs for p in ("$.a", "$.b.c")] + [(docs[0], None)]
+    df = (
+        spark.createDataFrame(rows, "j string, p string")
+        .coalesce(1)
+        .withColumn("v", explicit.variant_from_json(F.col("j")))
+    )
+    out = df.select(
+        "p",
+        F.expr("codec_get_bigint(v, p)").alias("sql_int"),
+        F.expr("codec_get_string(v, p)").alias("sql_str"),
+        explicit.variant_get("v", "$.a", "bigint").alias("a_int"),
+        explicit.variant_get("v", "$.a", "string").alias("a_str"),
+        explicit.variant_get("v", "$.b.c", "bigint").alias("c_int"),
+        explicit.variant_get("v", "$.b.c", "string").alias("c_str"),
+    ).collect()
+    for r in out:
+        if r["p"] is None:
+            assert r["sql_int"] is None and r["sql_str"] is None
+            continue
+        col = "a" if r["p"] == "$.a" else "c"
+        assert (r["sql_int"], r["sql_str"]) == (r[f"{col}_int"], r[f"{col}_str"])
+    assert [r["sql_int"] for r in out[:8]] == [1, None, 2, 7, 3, None, None, 9]
 
 
 def test_explicit_matches_native(spark):

@@ -105,7 +105,8 @@ def test_window_capacity_not_exceeded_by_new_queries():
     guarantee (every query driver-hashed at least once) silently
     breaks. If this fails, STOP adding registry queries this round."""
     reg = Q.load_all_queries()
-    unverified = [n for n in reg if n not in Q._driver_verified_names()]
+    verified = Q._driver_verified_names()
+    unverified = [n for n in reg if n not in verified]
     assert len(unverified) <= Q._WINDOW, (
         f"{len(unverified)} never-verified queries > window "
         f"{Q._WINDOW}: the overflow would miss this round's sweep"

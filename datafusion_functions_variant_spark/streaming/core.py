@@ -267,8 +267,8 @@ def stateful_running_max(stream: DataFrame, delay: str = "1 minute") -> DataFram
     )
 
 
-#: conf knobs for ``stateful_shuffle_width`` — explicit override wins,
-#: else width = clamp(input_rows / target_rows, floor, session
+#: constants of ``stateful_shuffle_width``, which derives
+#: width = clamp(input_rows / target_rows, floor, session
 #: shuffle partitions). A stateful exchange pays a PER-PARTITION fixed
 #: toll every micro-batch (state store open/commit + one Python
 #: state-runner handshake), so width beyond what the keyed work needs
@@ -281,8 +281,6 @@ def stateful_running_max(stream: DataFrame, delay: str = "1 minute") -> DataFram
 #: (7.06 s vs 16.42 — 15k users × 8 state round-trips each need every
 #: core). 25k rows per partition crosses over exactly between those
 #: two measured points.
-STATE_WIDTH_CONF = "spark.graft.streaming.stateWidth"
-STATE_WIDTH_TARGET_CONF = "spark.graft.streaming.stateWidthTargetRows"
 _STATE_WIDTH_FLOOR = 8
 _STATE_WIDTH_TARGET_ROWS = 25_000
 
@@ -322,53 +320,33 @@ def stateful_shuffle_width(spark: SparkSession, input_path: str) -> int:
     serializes the per-key state round-trips (round-16 A/B: 8 wide at
     1M rows ran 2.3× slower than 32). Width therefore derives from the
     input ROW COUNT, read from parquet footers before the stream
-    starts: one partition per ``stateWidthTargetRows`` (default 25k),
-    floored at 8 and capped at the session's shuffle-partition setting
-    — a 100 TB feed saturates the cap, i.e. behaves exactly as before;
-    the derivation only narrows SMALL states.
-    ``spark.graft.streaming.stateWidth`` overrides outright;
-    deployments that know their key cardinality should set it."""
-    explicit = spark.conf.get(STATE_WIDTH_CONF, None)
-    if explicit:
-        return max(1, int(explicit))
+    starts: one partition per 25k rows, floored at 8 and capped at the
+    session's shuffle-partition setting — a 100 TB feed saturates the
+    cap, i.e. behaves exactly as before; the derivation only narrows
+    SMALL states. Unreadable footers give the session width."""
     session_width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     rows = _input_rows(input_path)
     if rows is None:
         return session_width
-    target = int(
-        spark.conf.get(STATE_WIDTH_TARGET_CONF, None)
-        or _STATE_WIDTH_TARGET_ROWS
-    )
+    target = _STATE_WIDTH_TARGET_ROWS
     derived = (rows + target - 1) // target
     return max(min(max(int(derived), _STATE_WIDTH_FLOOR), session_width), 1)
 
 
-class scoped_shuffle_width:
-    """Context manager: pin ``spark.sql.shuffle.partitions`` for the
-    duration of one (eager) streaming run, restoring the session value
-    after — the stateful exchange freezes the width at first batch, so
-    the pin only needs to cover ``run_to_batch``."""
-
-    def __init__(self, spark: SparkSession, width: int):
-        self._spark = spark
-        self._width = int(width)
-        self._prev: str | None = None
-
-    def __enter__(self) -> "scoped_shuffle_width":
-        try:
-            self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-        except Exception:
-            self._prev = None
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(self._width))
-        return self
-
-    def __exit__(self, *exc) -> None:
-        if self._prev is None:
-            self._spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            self._spark.conf.set(
-                "spark.sql.shuffle.partitions", self._prev
-            )
+def child_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A ``spark.newSession()`` child (same SparkContext, its own SQL
+    conf and temp views) carrying the parent's conf plus ``confs`` — so
+    an operator can run under its own conf without mutating the
+    caller's session. A bare ``newSession()`` keeps the SparkContext's
+    confs but drops every conf set at runtime (e.g. ``nanosAsLong``, without
+    which events.parquet is unreadable, or ``spark.hadoop.*`` store
+    credentials), so each parent value the child lacks is copied."""
+    child = spark.newSession()
+    fresh = child.conf.getAll
+    inherited = {k: v for k, v in spark.conf.getAll.items() if fresh.get(k) != v}
+    for k, v in {**inherited, **confs}.items():
+        child.conf.set(k, v)
+    return child
 
 
 def _fold_profile_batch(pdf) -> tuple[int, int, dict]:
@@ -425,11 +403,12 @@ def transform_with_state_profile(stream: DataFrame) -> DataFrame:
     is bit-deterministic across engines.
 
     Requires the RocksDB state store provider (the only provider
-    transformWithState supports) — callers set
-    ``spark.sql.streaming.stateStore.providerClass`` — and the Python
-    ``protobuf`` package (the state-server wire protocol), which this
-    container lacks; the operator is therefore exercised by an
-    availability-gated test rather than a registry query. At scale:
+    transformWithState supports) as the stream session's
+    ``spark.sql.streaming.stateStore.providerClass`` — build ``stream``
+    on a ``child_session`` carrying it, so the caller's session keeps
+    its own — and the Python ``protobuf`` package (the state-server
+    wire protocol; vendor/miniproto stands in when the wheel is
+    absent). The registry twin is ``stream_transform_with_state``. At scale:
     state is partitioned by the grouping key across executors and
     checkpointed incrementally by RocksDB — this exact code runs
     unbounded with a TTL on the state handles."""

@@ -49,10 +49,7 @@ from ..operators.bloom import bloom_build, bloom_m_bits, bloom_member_sql
 #: Default history-size cutoff for the broadcast plan. ~4M 32-char md5
 #: keys is ~256 MB of join-side hash table — the upper edge of what a
 #: healthy executor should host; past it the bucketed-index plan wins.
-#: Env-overridable so a cluster profile can re-dial it without code.
-DEFAULT_BROADCAST_THRESHOLD_ROWS = int(
-    os.environ.get("SPARK_GRAFT_HISTORY_BROADCAST_ROWS", 4_000_000)
-)
+DEFAULT_BROADCAST_THRESHOLD_ROWS = 4_000_000
 
 #: Bloom bitset hard cap: 2^26 bits = 8 MiB — always broadcastable.
 DEFAULT_BLOOM_MAX_BITS = 1 << 26

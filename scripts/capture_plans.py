@@ -1,8 +1,9 @@
 """Capture ``.explain("formatted")`` for every headline query into
-plans/r15/<query>_<tag>.txt — the optimization round's plan evidence
+plans/<round>/<query>_<tag>.txt — an optimization round's plan evidence
 (the judge checks plan claims against these files).
 
-Usage: python scripts/capture_plans_r15.py <tag> [name ...]
+Usage: python scripts/capture_plans.py <round> <tag> [name ...]
+  round: output directory under plans/ (e.g. r17)
   tag:  'before' | 'after' (file suffix)
   name: optional subset of query names (default: all HEADLINE +
         HEADLINE_ISOLATED from bench.py)
@@ -25,8 +26,11 @@ from bench import HEADLINE, HEADLINE_ISOLATED  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    subset = sys.argv[2:] or None
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    round_ = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    subset = sys.argv[3:] or None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -35,7 +39,7 @@ def main() -> None:
     from datafusion_functions_variant_spark.streaming import core as score
 
     spark = get_session(
-        app_name=f"plans_r15_{tag}",
+        app_name=f"plans_{round_}_{tag}",
         master=f"local[{cpus}]",
         shuffle_partitions=max(cpus, 16),
     )
@@ -45,7 +49,7 @@ def main() -> None:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r15",
+        round_,
     )
     os.makedirs(out_dir, exist_ok=True)
 

@@ -1,4 +1,4 @@
-"""Isolated per-query measurement for the optimization round.
+"""Isolated per-query measurement for an optimization round.
 
 Times a subset of registry queries with the SAME warmup+median
 protocol as bench.py (one untimed warmup, N timed samples, median +
@@ -11,7 +11,9 @@ consume modes:
   every row, discards; no JVM-side checksum arithmetic).
 
 Usage:
-  python scripts/measure_r15.py [--runs N] [--dir D] [--noop] name...
+  python scripts/measure.py <round> [--runs N] [--dir D] [--noop] name...
+
+``round`` (e.g. r17) names the Spark application.
 
 Prints one line per query: name, median, min, loadavg-at-finish.
 """
@@ -29,6 +31,7 @@ from bench import loadavg_now, time_samples  # noqa: E402
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("round")
     ap.add_argument("names", nargs="+")
     ap.add_argument("--runs", type=int, default=5)
     ap.add_argument("--dir", default=os.environ.get(
@@ -43,7 +46,7 @@ def main() -> None:
     from datafusion_functions_variant_spark.queries import load_all_queries
 
     spark = get_session(
-        app_name="measure_r15",
+        app_name=f"measure_{args.round}",
         master=f"local[{cpus}]",
         shuffle_partitions=max(cpus, 16),
     )

@@ -53,6 +53,7 @@ import pytest
 
 from .conftest import SF_DIR
 
+PROVIDER = "spark.sql.streaming.stateStore.providerClass"
 ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
 
@@ -133,50 +134,43 @@ def test_transform_with_state_profile(spark):
     from datafusion_functions_variant_spark.sources.tables import load_table
     from datafusion_functions_variant_spark.streaming import core
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-    try:
-        st = core.read_events_stream(spark, SF_DIR)
-        out = core.run_to_batch(core.transform_with_state_profile(st), "update")
-        # counts are monotonic → last (= max) emission is the final state
-        got = (
-            out.groupBy("user_id", "event_type")
-            .agg(
-                F.max("n_type").alias("n_type"),
-                F.max("n_total").alias("n_total"),
-                F.max("sum_value").alias("sum_value"),
-            )
-            .orderBy("user_id", "event_type")
-            .collect()
+    child = core.child_session(spark, {PROVIDER: ROCKSDB})
+    st = core.read_events_stream(child, SF_DIR)
+    out = core.run_to_batch(core.transform_with_state_profile(st), "update")
+    # counts are monotonic → last (= max) emission is the final state
+    got = (
+        out.groupBy("user_id", "event_type")
+        .agg(
+            F.max("n_type").alias("n_type"),
+            F.max("n_total").alias("n_total"),
+            F.max("sum_value").alias("sum_value"),
         )
-        ev = load_table(spark, SF_DIR, "events")
-        per_type = (
-            ev.groupBy("user_id", "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_type"),
-                F.sum(F.col("value").cast("decimal(18,2)")).alias("s"),
-            )
+        .orderBy("user_id", "event_type")
+        .collect()
+    )
+    ev = load_table(spark, SF_DIR, "events")
+    per_type = (
+        ev.groupBy("user_id", "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_type"),
+            F.sum(F.col("value").cast("decimal(18,2)")).alias("s"),
         )
-        from pyspark.sql import Window
+    )
+    from pyspark.sql import Window
 
-        uw = Window.partitionBy("user_id")
-        want = (
-            per_type.select(
-                "user_id",
-                "event_type",
-                "n_type",
-                F.sum("n_type").over(uw).alias("n_total"),
-                F.sum("s").over(uw).cast("double").alias("sum_value"),
-            )
-            .orderBy("user_id", "event_type")
-            .collect()
+    uw = Window.partitionBy("user_id")
+    want = (
+        per_type.select(
+            "user_id",
+            "event_type",
+            "n_type",
+            F.sum("n_type").over(uw).alias("n_total"),
+            F.sum("s").over(uw).cast("double").alias("sum_value"),
         )
-        assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+        .orderBy("user_id", "event_type")
+        .collect()
+    )
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
 def test_checkpoint_recovery_exactly_once(spark, tmp_path):
@@ -327,22 +321,14 @@ def test_rocksdb_state_store_tumbling_counts(spark):
 
     from datafusion_functions_variant_spark.streaming import core
 
-    def run():
-        st = core.read_events_stream(spark, SF_DIR)
+    def run(session):
+        st = core.read_events_stream(session, SF_DIR)
         agg = core.tumbling_counts(st)
         return sorted(map(tuple, core.run_to_batch(agg, "append").collect()))
 
-    baseline = run()
+    baseline = run(spark)
     assert len(baseline) > 0
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-    try:
-        assert run() == baseline
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    assert run(core.child_session(spark, {PROVIDER: ROCKSDB})) == baseline
 
 
 def test_transform_with_state_timers(spark, tmp_path):
@@ -431,12 +417,11 @@ def test_transform_with_state_timers(spark, tmp_path):
         .distinct()
         .collect()
     }
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
+    child = core.child_session(spark, {PROVIDER: ROCKSDB})
     q = None
     try:
         st = core.read_multibatch_events_stream(
-            spark, SF_DIR, str(tmp_path / "splits")
+            child, SF_DIR, str(tmp_path / "splits")
         )
         q = (
             st.select("user_id", "event_type", "value")
@@ -457,7 +442,7 @@ def test_transform_with_state_timers(spark, tmp_path):
         registered: set = set()
         expired: set = set()
         while _time.time() < deadline:
-            rows = spark.table("timer_sink").collect()
+            rows = child.table("timer_sink").collect()
             registered = {r.user_id for r in rows if r.kind == "registered"}
             expired = {r.user_id for r in rows if r.kind == "expired"}
             if registered == all_users and expired == all_users:
@@ -468,12 +453,8 @@ def test_transform_with_state_timers(spark, tmp_path):
     finally:
         if q is not None and q.isActive:
             q.stop()
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
-    rows = spark.table("timer_sink").collect()
+    rows = child.table("timer_sink").collect()
     assert registered == all_users
     assert expired == all_users  # every registered (past) timer fired
     assert all(
@@ -583,13 +564,12 @@ def test_transform_with_state_liststate_and_ttl(spark, tmp_path):
             acc[r.user_id] = (max(n, r.n_entries), max(s, r.sum_entries))
         return acc
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
+    child = core.child_session(spark, {PROVIDER: ROCKSDB})
     q = None
     rows: list = []
     try:
         st = core.read_multibatch_events_stream(
-            spark, SF_DIR, str(tmp_path / "splits")
+            child, SF_DIR, str(tmp_path / "splits")
         )
         q = (
             st.select("user_id", "value")
@@ -609,7 +589,7 @@ def test_transform_with_state_liststate_and_ttl(spark, tmp_path):
         deadline = _time.time() + 300
         got: dict = {}
         while _time.time() < deadline:
-            rows = spark.table("ttl_list_sink").collect()
+            rows = child.table("ttl_list_sink").collect()
             got = totals_of(rows)
             if got == want:
                 break
@@ -617,17 +597,13 @@ def test_transform_with_state_liststate_and_ttl(spark, tmp_path):
                 # the final micro-batch may have committed between the
                 # collect above and this check — re-collect once so a
                 # commit in that window can't fail the test spuriously
-                rows = spark.table("ttl_list_sink").collect()
+                rows = child.table("ttl_list_sink").collect()
                 got = totals_of(rows)
                 break
             _time.sleep(2)
     finally:
         if q is not None and q.isActive:
             q.stop()
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
     assert got == want
     # TTL observation: the 1 ms ValueState expired before every
@@ -691,33 +667,26 @@ def test_transform_with_state_initial_state_handoff(spark):
     seeds = ev.select("user_id").distinct().select(
         "user_id", (F.col("user_id") + 1000).alias("seed")
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-    try:
-        st = core.read_events_stream(spark, SF_DIR)
-        out = core.run_to_batch(
-            st.select("user_id", "event_type")
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=SeededCounter(),
-                outputStructType=out_schema,
-                outputMode="Update",
-                timeMode="None",
-                initialState=seeds.groupBy("user_id"),
-            ),
-            "update",
-        )
-        got = {
-            r.user_id: r.n_total
-            for r in out.groupBy("user_id")
-            .agg(F.max("n_total").alias("n_total"))
-            .collect()
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    child = core.child_session(spark, {PROVIDER: ROCKSDB})
+    st = core.read_events_stream(child, SF_DIR)
+    out = core.run_to_batch(
+        st.select("user_id", "event_type")
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            statefulProcessor=SeededCounter(),
+            outputStructType=out_schema,
+            outputMode="Update",
+            timeMode="None",
+            initialState=seeds.groupBy("user_id"),
+        ),
+        "update",
+    )
+    got = {
+        r.user_id: r.n_total
+        for r in out.groupBy("user_id")
+        .agg(F.max("n_total").alias("n_total"))
+        .collect()
+    }
 
     want = {
         r.user_id: r.n + 1000 + r.user_id
@@ -799,30 +768,23 @@ def test_transform_with_state_mapstate_full_api_and_delete(spark):
         def close(self) -> None:
             pass
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-    try:
-        st = core.read_events_stream(spark, SF_DIR)
-        out = core.run_to_batch(
-            st.select("user_id", "event_type")
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=MapApiProcessor(),
-                outputStructType=out_schema,
-                outputMode="Update",
-                timeMode="None",
-            ),
-            "update",
-        )
-        got = {
-            r.user_id: (r.removed_type, r.n_keys_left, r.sum_left)
-            for r in out.collect()
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    child = core.child_session(spark, {PROVIDER: ROCKSDB})
+    st = core.read_events_stream(child, SF_DIR)
+    out = core.run_to_batch(
+        st.select("user_id", "event_type")
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            statefulProcessor=MapApiProcessor(),
+            outputStructType=out_schema,
+            outputMode="Update",
+            timeMode="None",
+        ),
+        "update",
+    )
+    got = {
+        r.user_id: (r.removed_type, r.n_keys_left, r.sum_left)
+        for r in out.collect()
+    }
 
     ev = load_table(spark, SF_DIR, "events")
     agg = (
@@ -971,8 +933,7 @@ def test_preflight_python_exec_raises_on_failing_import(spark, tmp_path):
 def test_stateful_shuffle_width_derivation(spark, monkeypatch, tmp_path):
     """Round 16 (VERDICT r15 #1): the stateful exchange's width must be
     scale-adaptive — floor 8 for tiny state, growing with input bytes,
-    capped at the session shuffle setting, with an explicit conf
-    override winning outright."""
+    capped at the session shuffle setting."""
     from datafusion_functions_variant_spark.streaming import core
 
     session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -1003,25 +964,63 @@ def test_stateful_shuffle_width_derivation(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(core, "_input_rows", lambda p: None)
     assert core.stateful_shuffle_width(spark, "ignored") == session_width
 
-    # explicit override wins
-    spark.conf.set(core.STATE_WIDTH_CONF, "3")
-    try:
-        assert core.stateful_shuffle_width(spark, "ignored") == 3
-    finally:
-        spark.conf.unset(core.STATE_WIDTH_CONF)
 
-
-def test_scoped_shuffle_width_restores_session_value(spark):
+def test_child_session_keeps_runtime_confs(spark):
+    """``newSession()`` drops confs set at runtime, SQL and non-SQL
+    keys alike; the child gets them back, plus its own."""
     from datafusion_functions_variant_spark.streaming import core
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    with core.scoped_shuffle_width(spark, 5):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    # restores on exception too
-    try:
-        with core.scoped_shuffle_width(spark, 7):
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    parent = spark.newSession()
+    runtime = {"spark.sql.ansi.enabled": "false", "spark.hadoop.fs.probe.x": "1"}
+    for k, v in runtime.items():
+        parent.conf.set(k, v)
+    child = core.child_session(parent, {"spark.sql.shuffle.partitions": "3"})
+    want = {**runtime, "spark.sql.shuffle.partitions": "3"}
+    assert {k: child.conf.get(k, None) for k in want} == want
+
+
+@pytest.mark.parametrize("raises", [False, True], ids=["ok", "raises"])
+def test_stream_transform_with_state_leaves_parent_conf_unchanged(
+    spark, monkeypatch, raises
+):
+    """The stateful op applies its derived state width and the RocksDB
+    provider in a child session: the caller's session never sees
+    either, while the stream runs or after it raises, and the executed
+    stateful exchange still has the derived width."""
+    pytest.importorskip("google.protobuf")
+    import re
+
+    from datafusion_functions_variant_spark.queries.streaming_queries import (
+        stream_transform_with_state,
+    )
+    from datafusion_functions_variant_spark.streaming import core
+
+    def parent_conf():
+        keys = ("spark.sql.shuffle.partitions", PROVIDER)
+        return {k: spark.conf.get(k, None) for k in keys}
+
+    before = parent_conf()
+    # a floor below the session width makes the derived width (3 at
+    # this input size) differ from the parent's
+    monkeypatch.setattr(core, "_STATE_WIDTH_FLOOR", 3)
+    seen = []
+    real_run_to_batch = core.run_to_batch
+
+    def recording_run_to_batch(stream_df, output_mode="append"):
+        seen.append(parent_conf())
+        if raises:
+            raise RuntimeError("stream failed")
+        return real_run_to_batch(stream_df, output_mode)
+
+    monkeypatch.setattr(core, "run_to_batch", recording_run_to_batch)
+    core.LAST_EXECUTED_PLAN[0] = ""
+    if raises:
+        with pytest.raises(RuntimeError, match="stream failed"):
+            stream_transform_with_state(spark, SF_DIR)
+    else:
+        stream_transform_with_state(spark, SF_DIR).collect()
+        assert re.search(
+            r"hashpartitioning\(user_id#\d+L?, 3\)", core.LAST_EXECUTED_PLAN[0]
+        ), core.LAST_EXECUTED_PLAN[0]
+    assert seen == [before]
+    assert parent_conf() == before

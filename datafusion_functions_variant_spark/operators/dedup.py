@@ -202,19 +202,27 @@ def minhash_signatures_text(
 
 def text_content_key(col) -> F.Column:
     """Composite content key for DISTINCT-text collapsing:
-    ``struct(xxhash64(text), length(text))`` — one JVM hash intrinsic
-    plus a length guard (~74 bits of discrimination) instead of an md5
-    digest + hex per full text, which was itself a scan-wide hash pass
-    on both sides of the canonical signing (round 16, VERDICT r15 #2;
-    guide §2.3 narrower keys). The key is INTERNAL — it groups exact
-    copies and is dropped before any output — so the md5→xxhash64 swap
-    is invisible to the oracles. NULL text yields a NULL key (top-level
-    null struct), mirroring ``md5(NULL)``: null-keyed rows never match
-    an (inner/semi) join-back, exactly as before."""
+    ``struct(xxhash64(text), xxhash64(reverse(text)), length(text))`` —
+    two JVM hash intrinsics plus a length guard (128 hash bits, ~138
+    with the length) instead of an md5 digest + hex per full text,
+    which was itself a scan-wide hash pass on both sides of the
+    canonical signing (guide §2.3 narrower keys). One 64-bit hash and
+    the length (~74 bits) are too few for a key that must never merge
+    two distinct texts at billions of rows (a merged pair loses one
+    text's signature); the reversed text gives a second 64-bit hash of
+    the same bytes. The key is INTERNAL — it groups exact copies and is
+    dropped before any output — so the hash choice is invisible to the
+    oracles. NULL text yields a NULL key (top-level null struct),
+    mirroring ``md5(NULL)``: null-keyed rows never match an
+    (inner/semi) join-back."""
     c = F.col(col) if isinstance(col, str) else col
     return F.when(
         c.isNotNull(),
-        F.struct(F.xxhash64(c).alias("h"), F.length(c).alias("l")),
+        F.struct(
+            F.xxhash64(c).alias("h"),
+            F.xxhash64(F.reverse(c)).alias("r"),
+            F.length(c).alias("l"),
+        ),
     )
 
 
@@ -229,8 +237,8 @@ def minhash_signatures_text_canonical(
     """``minhash_signatures_text`` with exact-duplicate texts
     collapsed FIRST: the signature is a pure function of the text, so
     each DISTINCT text is signed once and the signatures are joined
-    back to ids by the content key (``text_content_key``: xxhash64 +
-    length — round 16 swapped the md5 digest for the JVM intrinsic) —
+    back to ids by the content key (``text_content_key``: two xxhash64
+    intrinsics + length instead of an md5 digest) —
     identical (id, mh*) rows, the gram-hash stage (the dominant cost:
     ~len(text) md5s per text) paid once per distinct text instead of
     once per copy.

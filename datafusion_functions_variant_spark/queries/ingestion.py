@@ -129,9 +129,9 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # function of the corpus' distinct texts — so sign each distinct
     # text once (content-key id, no join-back needed): the
     # md5-per-gram stage stops paying for exact-duplicate mass
-    # (round 15; identical index contents by construction). r16: the
-    # key is dedup.text_content_key (xxhash64+length intrinsic, not a
-    # full-text md5 digest — VERDICT r15 #2).
+    # (round 15; identical index contents by construction). The key is
+    # dedup.text_content_key (two xxhash64 intrinsics + length, not a
+    # full-text md5 digest).
     corpus_t = (
         corpus.select(dedup.text_content_key("text").alias("_th"), "text")
         # one pinned-width exchange for dedup AND spread: an explicit
@@ -1327,7 +1327,7 @@ def bucketed_index_build(spark: SparkSession, sf_dir: str) -> None:
     )
     # distinct-text signing, same rationale as dedup_incremental_index
     # (the persisted index is the distinct band set — id-free; the key
-    # is the xxhash64+length content key, r16)
+    # is dedup.text_content_key)
     corpus_t = (
         corpus.select(dedup.text_content_key("text").alias("_th"), "text")
         # same single-exchange dedup+spread as the unbucketed twin

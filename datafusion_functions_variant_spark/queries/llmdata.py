@@ -93,7 +93,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     # the round-15 canonicalize-first signing lives in this helper;
     # without the declaration, editing it would not re-front the query
-    # (r16: + the xxhash64+length content key it collapses on)
+    # (+ the content key it collapses on)
     hash_deps=(dedup.minhash_signatures_text_canonical, dedup.text_content_key),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -268,19 +268,21 @@ def stateful_running_max(stream: DataFrame, delay: str = "1 minute") -> DataFram
 
 
 #: constants of ``stateful_shuffle_width``, which derives
-#: width = clamp(input_rows / target_rows, floor, session
-#: shuffle partitions). A stateful exchange pays a PER-PARTITION fixed
-#: toll every micro-batch (state store open/commit + one Python
-#: state-runner handshake), so width beyond what the keyed work needs
-#: is pure overhead — but width BELOW the keyed work's parallelism
-#: need serializes the per-key processing. Both regimes were measured
-#: on this exact key (round 16 interleaved A/B, one checksum across
-#: variants): at 100k input rows width 8 beats 32 (min 3.92 s vs
-#: 5.43 — and the r15 DRIVER scaling block showed the same key 2×
-#: faster at half the width), while at 1M rows width 32 beats 8
-#: (7.06 s vs 16.42 — 15k users × 8 state round-trips each need every
-#: core). 25k rows per partition crosses over exactly between those
-#: two measured points.
+#: width = clamp(input_rows / target_rows, min(floor, task slots),
+#: session shuffle partitions). A stateful exchange pays a
+#: PER-PARTITION fixed toll every micro-batch (state store open/commit
+#: + one Python state-runner handshake), so width beyond what the keyed
+#: work needs is pure overhead — but width BELOW the keyed work's
+#: parallelism need serializes the per-key processing. Both regimes
+#: were measured on this exact key (interleaved A/B, one checksum
+#: across variants): at 100k input rows width 8 beats 32 (min 3.92 s
+#: vs 5.43), while at 1M rows width 32 beats 8 (7.06 s vs 16.42 — 15k
+#: users × 8 state round-trips each need every core). 25k rows per
+#: partition crosses over exactly between those two measured points.
+#: The floor is capped at the session's task slots: a stateful exchange
+#: wider than the slots runs in waves, and each wave pays the
+#: per-partition toll again (local[2], 1k events, 4-vCPU VM: addBatch
+#: 2.1-2.4 s at width 8, 0.8-1.1 s at width 2).
 _STATE_WIDTH_FLOOR = 8
 _STATE_WIDTH_TARGET_ROWS = 25_000
 
@@ -320,17 +322,22 @@ def stateful_shuffle_width(spark: SparkSession, input_path: str) -> int:
     serializes the per-key state round-trips (round-16 A/B: 8 wide at
     1M rows ran 2.3× slower than 32). Width therefore derives from the
     input ROW COUNT, read from parquet footers before the stream
-    starts: one partition per 25k rows, floored at 8 and capped at the
-    session's shuffle-partition setting — a 100 TB feed saturates the
-    cap, i.e. behaves exactly as before; the derivation only narrows
-    SMALL states. Unreadable footers give the session width."""
+    starts: one partition per 25k rows, floored at min(8, the
+    SparkContext's task slots) and capped at the session's
+    shuffle-partition setting — a 100 TB feed saturates the cap, i.e.
+    behaves exactly as before; the derivation only narrows SMALL
+    states. The slot count lowers only the floor, never the width
+    derived from the input, so a large stream that starts before a
+    cluster's executors have registered keeps its proportional width.
+    Unreadable footers give the session width."""
     session_width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     rows = _input_rows(input_path)
     if rows is None:
         return session_width
     target = _STATE_WIDTH_TARGET_ROWS
     derived = (rows + target - 1) // target
-    return max(min(max(int(derived), _STATE_WIDTH_FLOOR), session_width), 1)
+    floor = min(_STATE_WIDTH_FLOOR, spark.sparkContext.defaultParallelism)
+    return max(min(max(int(derived), floor), session_width), 1)
 
 
 def child_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:

@@ -1445,6 +1445,46 @@ def test_minhash_signatures_text_canonical_equals_plain(spark):
         assert len({r[0] for r in rows_c}) == 30  # one row per doc id
 
 
+def test_text_content_key_is_128_bit_and_plan_stays_intrinsic(spark):
+    """The content key the canonical signing collapses on carries two
+    64-bit xxhash64 values (text and reversed text) plus the length,
+    and the canonical plan stays JVM-intrinsic: no md5 digest, no
+    Python UDF, and the same two hash exchanges (content-key
+    repartition + join-back) as the one-hash key had."""
+    from pyspark.sql.types import IntegerType, LongType, StructType
+
+    from datafusion_functions_variant_spark.operators.dedup import (
+        minhash_signatures_text_canonical,
+        text_content_key,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, ["abcdefghij", "jihgfedcba", None][i % 3]) for i in range(9)],
+        ["doc_id", "text"],
+    )
+    keyed = docs.select("doc_id", text_content_key("text").alias("k"))
+    key_type = keyed.schema["k"].dataType
+    assert isinstance(key_type, StructType)
+    assert [f.dataType for f in key_type.fields] == [
+        LongType(), LongType(), IntegerType()
+    ]
+    keys = {r.doc_id % 3: r.k for r in keyed.collect()}
+    assert keys[2] is None  # NULL text -> NULL key, never joins back
+    # a text and its reverse share length and swap the two hashes
+    assert (keys[0].h, keys[0].r) == (keys[1].r, keys[1].h)
+    assert keys[0].h != keys[0].r
+
+    canon = minhash_signatures_text_canonical(
+        docs, "text", "doc_id", num_hashes=4, hash_fn="xxhash64"
+    )
+    plan = canon._jdf.queryExecution().executedPlan().toString()
+    assert "reverse" in plan and "xxhash64" in plan
+    for banned in ("md5", "PythonUDF", "BatchEvalPython", "ArrowEvalPython"):
+        assert banned not in plan, plan
+    assert plan.count("Exchange") == 2, plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
 def test_history_degenerate_attach_and_noop_rebuild(spark):
     """attach() with no bloom headroom must come back bitset-less
     (member() passes everything, rebuild_bitset is a no-op) while the

@@ -931,9 +931,9 @@ def test_preflight_python_exec_raises_on_failing_import(spark, tmp_path):
 
 
 def test_stateful_shuffle_width_derivation(spark, monkeypatch, tmp_path):
-    """Round 16 (VERDICT r15 #1): the stateful exchange's width must be
-    scale-adaptive — floor 8 for tiny state, growing with input bytes,
-    capped at the session shuffle setting."""
+    """The stateful exchange's width is scale-adaptive: floor
+    min(8, task slots) for tiny state, growing with input rows, capped
+    at the session shuffle setting."""
     from datafusion_functions_variant_spark.streaming import core
 
     session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -946,7 +946,7 @@ def test_stateful_shuffle_width_derivation(spark, monkeypatch, tmp_path):
     pq.write_table(pa.table({"x": list(range(5))}), str(small))
     assert core._input_rows(str(small)) == 5
     assert core.stateful_shuffle_width(spark, str(small)) == min(
-        8, session_width
+        8, spark.sparkContext.defaultParallelism, session_width
     )
 
     # huge input -> rows / target, capped at the session width
@@ -961,6 +961,38 @@ def test_stateful_shuffle_width_derivation(spark, monkeypatch, tmp_path):
     assert core.stateful_shuffle_width(spark, "ignored") == expect
 
     # unreadable input -> the session width (the pre-r16 behavior)
+    monkeypatch.setattr(core, "_input_rows", lambda p: None)
+    assert core.stateful_shuffle_width(spark, "ignored") == session_width
+
+
+def test_stateful_shuffle_width_floor_follows_task_slots(
+    spark, monkeypatch, tmp_path
+):
+    """Below 8 task slots the floor is the slot count: 8 stateful
+    partitions on 2 slots would run in 4 waves, each paying the
+    per-partition state-store and runner toll again. The slots lower
+    only the floor: the width derived from the input and the
+    unreadable-footer fallback are unchanged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_functions_variant_spark.streaming import core
+
+    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda s: 2)
+    )
+    assert spark.sparkContext.defaultParallelism == 2
+
+    small = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"x": list(range(5))}), str(small))
+    assert core.stateful_shuffle_width(spark, str(small)) == min(2, session_width)
+
+    monkeypatch.setattr(
+        core, "_input_rows", lambda p: 10 * core._STATE_WIDTH_TARGET_ROWS
+    )
+    assert core.stateful_shuffle_width(spark, "ignored") == min(10, session_width)
+
     monkeypatch.setattr(core, "_input_rows", lambda p: None)
     assert core.stateful_shuffle_width(spark, "ignored") == session_width
 
